@@ -69,31 +69,15 @@ from pyspark.sql import functions as F
 MAX_BROADCAST_NODES = 10_000_000
 
 # applicationId -> list of {op, n_nodes, limit, hinted} decision
-# records (appId keying: id(session) values are reused after GC —
-# the _BANDED_CACHE convention).  Bounded two ways (r10 ADVICE): on
-# insert, records for OTHER application ids are evicted (a finished
-# application's log would otherwise leak for the process lifetime),
-# and the live application's list is capped at _GUARD_LOG_MAX records
-# (oldest dropped), so a long-lived driver looping pagerank/hits/lpa
-# holds O(1) log memory without a manual clear_guard_log.  The
-# operator caches (_HITS_CACHE / _LPA_CACHE / _KTRUSS_CACHE /
-# _KCORE_CACHE / _PR_CACHE) follow the same stale-app-id eviction on
-# entry (r11 ADVICE: pop-on-entry alone only covered the CURRENT app
-# id); stale entries are dropped WITHOUT unpersist — their
-# SparkContext is stopped, so only the Python handles would leak.
+# records (appId keying: id(session) values are reused after GC).
+# Bounded two ways (r10 ADVICE): on insert, records for OTHER
+# application ids are evicted (a finished application's log would
+# otherwise leak for the process lifetime), and the live
+# application's list is capped at _GUARD_LOG_MAX records (oldest
+# dropped), so a long-lived driver looping pagerank/hits/lpa holds
+# O(1) log memory without a manual clear_guard_log.
 _GUARD_LOG: dict[str, list[dict]] = {}
 _GUARD_LOG_MAX = 4096
-
-
-def evict_stale_app_entries(cache: dict, app_id: str) -> None:
-    """Drop operator-cache entries recorded under OTHER application
-    ids (r11 ADVICE: the pop-on-entry convention alone only covers
-    the CURRENT app id, so finished applications' DataFrame handles
-    leaked for the process lifetime).  Stale entries are dropped
-    WITHOUT unpersist — their SparkContext is stopped, the JVM cache
-    died with the application, and only the Python handles remain."""
-    for stale in [key for key in cache if key != app_id]:
-        cache.pop(stale, None)
 
 
 def hint_will_fit(n_nodes: int, limit: int | None = None) -> bool:

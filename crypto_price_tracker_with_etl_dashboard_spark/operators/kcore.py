@@ -48,23 +48,13 @@ from pyspark.sql import functions as F
 
 from crypto_price_tracker_with_etl_dashboard_spark.operators._broadcast_guard import (
     colocate_for_guarded_joins,
-    evict_stale_app_entries,
     guarded_broadcast,
     hint_will_fit,
 )
 from crypto_price_tracker_with_etl_dashboard_spark.operators._session_cache import (
-    MIRROR_CACHE,
-    session_plan_cache,
+    scratch,
+    session_cache,
 )
-
-
-# applicationId -> cached DataFrames from the previous kcore call
-# (the _LPA_CACHE convention): popped and unpersisted on the next
-# call under the SAME application; entries for OTHER application ids
-# are dropped on entry WITHOUT unpersist (their SparkContext is
-# stopped — the JVM cache died with the application, only the Python
-# handles would leak).
-_KCORE_CACHE: dict[str, list] = {}
 
 
 def _degrees(edges: DataFrame) -> DataFrame:
@@ -102,21 +92,11 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 20) -> DataFrame:
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    app_id = edges.sparkSession.sparkContext.applicationId
-    evict_stale_app_entries(_KCORE_CACHE, app_id)
-    for prev in _KCORE_CACHE.pop(app_id, []):
-        prev.unpersist()
-    held: list[DataFrame] = []
-    # materialize the edge projection ONCE (the triangles/LPA edge
-    # discipline): an uncached input would otherwise re-run its whole
-    # upstream build on every round's action.  Skip the cache when the
-    # CALLER already cached the input (the ktruss convention, r11
-    # ADVICE): re-caching an identical plan warns and risks dropping a
-    # sibling's cache entry on the next call's unpersist.
-    e = edges.select("u", "v")
-    if not (edges.storageLevel.useMemory or edges.storageLevel.useDisk):
-        e = e.cache()
-        held.append(e)
+    # cache the edge projection ONCE: an uncached input would
+    # otherwise re-run its whole upstream build on every round's action
+    e = scratch("kcore", edges.sparkSession).cache_input(
+        edges, edges.select("u", "v")
+    )
     # initial alive set from full-graph degrees; its count doubles as
     # the broadcast-guard bound for EVERY round (alive only shrinks),
     # already materialized for the convergence check — zero extra jobs
@@ -138,12 +118,9 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 20) -> DataFrame:
         # the LPA/pagerank discipline)
         nbr = colocate_for_guarded_joins(nbr, "b")
     # the mirror is SHARED with LPA and the coreness decomposition
-    # via the semantic-plan session cache (r12) — owned there, never
-    # in this operator's pop-and-unpersist list
-    # materialize-on-miss (r13): the count job runs only when the
+    # (r12); materialize-on-miss: the count job runs only when the
     # mirror is newly cached — LPA/coreness hits pay zero jobs here
-    nbr = session_plan_cache(MIRROR_CACHE, nbr, materialize=True)
-    _KCORE_CACHE[app_id] = held
+    nbr = session_cache(nbr, materialize=True)
     for _ in range(max_rounds):
         al = alive.select(F.col("node").alias("__kb"))
         deg = (
@@ -203,15 +180,9 @@ def core_decomposition(
     """
     if max_k < 1:
         raise ValueError(f"max_k must be >= 1, got {max_k}")
-    app_id = edges.sparkSession.sparkContext.applicationId
-    evict_stale_app_entries(_KCORE_CACHE, app_id)
-    for prev in _KCORE_CACHE.pop(app_id, []):
-        prev.unpersist()
-    held: list[DataFrame] = []
-    e = edges.select("u", "v")
-    if not (edges.storageLevel.useMemory or edges.storageLevel.useDisk):
-        e = e.cache()
-        held.append(e)
+    e = scratch("kcore", edges.sparkSession).cache_input(
+        edges, edges.select("u", "v")
+    )
     # the 1-core: every node incident to an edge (lazy checkpoint +
     # count = one job, the kcore() r12 discipline)
     alive = (
@@ -222,7 +193,6 @@ def core_decomposition(
     n_alive = alive.count()
     base = alive
     if max_k == 1:
-        _KCORE_CACHE[app_id] = held
         return base.select(
             "node", F.lit(1).cast("bigint").alias("core")
         )
@@ -233,9 +203,8 @@ def core_decomposition(
         # the per-round join key ONCE — every level's every round
         # then streams it with zero edge-side Exchange
         nbr = colocate_for_guarded_joins(nbr, "b")
-    # shared with LPA / kcore via the session plan cache (r12)
-    nbr = session_plan_cache(MIRROR_CACHE, nbr, materialize=True)
-    _KCORE_CACHE[app_id] = held
+    # shared with LPA / kcore via the session cache (r12)
+    nbr = session_cache(nbr, materialize=True)
     # Degree MEMOIZATION across rounds and levels (r12): ``deg``
     # always holds each node's alive-neighbor count over the CURRENT
     # alive set, so a round first filters the inherited table and

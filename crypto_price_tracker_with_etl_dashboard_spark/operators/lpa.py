@@ -40,17 +40,14 @@ from pyspark.sql import functions as F
 
 from crypto_price_tracker_with_etl_dashboard_spark.operators._broadcast_guard import (
     colocate_for_guarded_joins,
-    evict_stale_app_entries,
     guarded_broadcast,
     hint_will_fit,
 )
 from crypto_price_tracker_with_etl_dashboard_spark.operators._session_cache import (
-    MIRROR_CACHE,
     cached_count,
-    session_plan_cache,
+    scratch,
+    session_cache,
 )
-
-_LPA_CACHE: dict[str, list] = {}
 
 
 def label_propagation(
@@ -69,23 +66,16 @@ def label_propagation(
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    app_id = edges.sparkSession.sparkContext.applicationId
-    evict_stale_app_entries(_LPA_CACHE, app_id)
-    for prev in _LPA_CACHE.pop(app_id, []):
-        prev.unpersist()
-    held = []
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    if not (edges.storageLevel.useMemory or edges.storageLevel.useDisk):
-        # cache an UNCACHED input once (the ktruss/kcore convention,
-        # r12): a caller-cached edge build is reused as-is
-        e = e.cache()
-        held.append(e)
-        n_edges = e.count()  # materialize before the mirror fan-out
-    else:
-        # caller-cached input: the count is memoized on the caller's
-        # object (r13), so repeat LPA calls over the same session-
-        # cached edge table skip the job entirely
-        n_edges = cached_count(edges)
+    # cache an uncached input once, materialized before the mirror
+    # fan-out; a caller-cached edge build is reused as is
+    e = scratch("lpa", edges.sparkSession).cache_input(
+        edges,
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")),
+        materialize=True,
+    )
+    # the count is memoized on whichever object holds the cache, so
+    # repeat calls over the same caller-cached edge table run no job
+    n_edges = cached_count(e if e.is_cached else edges)
     nbr = e.select(
         F.explode(
             F.array(
@@ -103,11 +93,10 @@ def label_propagation(
         # so every round's shuffle_hash join streams it with zero
         # edge-side Exchange (only the O(nodes) label table shuffles)
         nbr = colocate_for_guarded_joins(nbr, "a")
-    # shared with kcore / the coreness decomposition via the session
-    # plan cache (r12) — owned there, not in _LPA_CACHE
-    # materialize-on-miss (r13): zero jobs when kcore/coreness
-    # already cached the identical mirror this session
-    nbr = session_plan_cache(MIRROR_CACHE, nbr, materialize=True)
+    # shared with kcore / the coreness decomposition (r12):
+    # materialize-on-miss, so zero jobs when kcore/coreness already
+    # cached the identical mirror this session
+    nbr = session_cache(nbr, materialize=True)
     labels = nbr.select(F.col("a").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
     )
@@ -139,9 +128,7 @@ def label_propagation(
         # Under AQE a lazy localCheckpoint executes all upstream
         # stages at CONSTRUCTION (one toRdd compile + jobs per round);
         # the caller's single action now runs the identical stages.
-    out = labels.select("node", F.col("lbl").alias("community"))
-    _LPA_CACHE[app_id] = held
-    return out
+    return labels.select("node", F.col("lbl").alias("community"))
 
 
 def sql_label_propagation(edges_cte: str, iters: int = 3) -> str:

@@ -51,24 +51,11 @@ from crypto_price_tracker_with_etl_dashboard_spark.operators._broadcast_guard im
     hint_will_fit,
 )
 from crypto_price_tracker_with_etl_dashboard_spark.operators._session_cache import (
-    session_plan_cache,
+    cached_count,
+    session_cache,
 )
 
 UNIT = 10**9
-
-# Session-scoped, sameResult-keyed cache of the pagerank-family build
-# tables (edges, nodes, out-weights, co-located variants).  r13
-# (VERDICT #1): the pre-r13 pop-and-unpersist-on-reentry convention
-# made trade_pagerank and trade_ppr rebuild the identical mirrored
-# edge cache, node table and out-weight table back to back — now the
-# second call's builds are all plan-cache hits, and only the rank
-# recursion itself (which differs per personalization) runs.  Shared
-# build tables are INPUTS: every consumer still runs its full
-# iteration stack on top (the r12 anti-gaming boundary).  Entries die
-# with the application; capacity bounds a parameter sweep's footprint
-# (3 tables per distinct edge input, one input registered today).
-_PR_CACHE: dict[str, list] = {}
-_PR_MAX_ENTRIES = 8
 
 
 def pagerank(
@@ -97,7 +84,7 @@ def pagerank(
     # the (possibly join-heavy) edge build re-executes for each —
     # measured 10.5s -> ~2s on the sf0.1 trade graph, where the
     # lineitem-orders join dominated and the 6 iterations cost 0.3s.
-    # Session plan cache with materialize-on-miss (r13): the count
+    # Session cache with materialize-on-miss (r13): the count
     # job runs only when the entry is new (the "first-action
     # branches recompute" hazard — nodes unions src+dst, so an
     # unmaterialized edge cache would compute once per union branch,
@@ -105,18 +92,14 @@ def pagerank(
     # pagerank call over the same edge expression (trade_ppr after
     # trade_pagerank) reuses edges, nodes AND outw with zero build
     # jobs.
-    edges = session_plan_cache(
-        _PR_CACHE, edges, max_entries=_PR_MAX_ENTRIES, materialize=True
-    )
-    nodes = session_plan_cache(
-        _PR_CACHE,
+    edges = session_cache(edges, materialize=True)
+    nodes = session_cache(
         edges.select(F.col(src).alias("node"))
         .unionByName(edges.select(F.col(dst).alias("node")))
         .distinct(),
-        max_entries=_PR_MAX_ENTRIES,
         materialize=True,
     )
-    n = nodes._graft_count
+    n = cached_count(nodes)
     if not hint_will_fit(n):
         # The guard will drop the per-round rank broadcast: pay ONE
         # hash-partitioning of the edge list on the per-round join
@@ -125,22 +108,16 @@ def pagerank(
         # edge-side Exchange — only the O(nodes) rank table shuffles
         # per round (the bucketed-table shape of operators/
         # bucketing.py, held in memory).  The raw edge/node layouts
-        # stay in the plan cache next to the co-located copies (the
+        # stay in the session cache next to the co-located copies (the
         # HITS dual-layout precedent): Dataset cache() is
         # MEMORY_AND_DISK, so the second copy degrades to disk spill,
         # never to an OOM, and a repeat call re-hits both layouts
         # instead of rebuilding the raw one from scratch.
-        edges_rt = session_plan_cache(
-            _PR_CACHE,
-            colocate_for_guarded_joins(edges, src),
-            max_entries=_PR_MAX_ENTRIES,
-            materialize=True,
+        edges_rt = session_cache(
+            colocate_for_guarded_joins(edges, src), materialize=True
         )
-        nodes = session_plan_cache(
-            _PR_CACHE,
-            colocate_for_guarded_joins(nodes, "node"),
-            max_entries=_PR_MAX_ENTRIES,
-            materialize=True,
+        nodes = session_cache(
+            colocate_for_guarded_joins(nodes, "node"), materialize=True
         )
     else:
         edges_rt = edges
@@ -166,13 +143,11 @@ def pagerank(
         .agg(F.sum(weight).cast("bigint").alias("__ow"))
         .select(F.col(src).alias("__onode"), "__ow")
     )
-    enriched = session_plan_cache(
-        _PR_CACHE,
+    enriched = session_cache(
         edges_rt.join(
             guarded_broadcast(outw, n, op="pagerank_outw"),
             F.col(src) == F.col("__onode"),
         ).select(src, dst, weight, "__ow"),
-        max_entries=_PR_MAX_ENTRIES,
         materialize=True,
     )
     if personalize is None:
@@ -218,7 +193,7 @@ def pagerank(
         else:
             ranked = enriched.join(
                 guarded_broadcast(s, n, op="pagerank_sum"),
-                F.col(src) == F.col("node"),
+                F.col(src) == F.col("__snode"),
                 "left",
             ).select(
                 F.col(dst),
@@ -229,17 +204,19 @@ def pagerank(
                 F.col(weight),
                 "__ow",
             )
+        # the sum table's key is reserved (__snode): a caller's src
+        # or dst column named "node" would make the join ambiguous
         contrib = ranked.select(
-            F.col(dst).alias("node"),
+            F.col(dst).alias("__snode"),
             (
                 (F.col("__rpr") * F.col(weight).cast("bigint"))
                 + F.expr("__ow div 2")
             ).alias("__num"),
             F.col("__ow"),
         ).select(
-            "node", F.expr("__num div __ow").alias("__c")
+            "__snode", F.expr("__num div __ow").alias("__c")
         )
-        s = contrib.groupBy("node").agg(F.sum("__c").alias("__S"))
+        s = contrib.groupBy("__snode").agg(F.sum("__c").alias("__S"))
         # NO per-round checkpoint (r13): the loop has no per-round
         # actions (unlike the convergence operators) and each round
         # references the previous damped-sum table exactly ONCE, so
@@ -255,7 +232,9 @@ def pagerank(
     # ONE final zero-extension over the full node table (was per
     # round): absent nodes get pr = base exactly as before
     ranks = nodes.join(
-        guarded_broadcast(s, n, op="pagerank_sum"), "node", "left"
+        guarded_broadcast(s, n, op="pagerank_sum"),
+        F.col("node") == F.col("__snode"),
+        "left",
     ).select(
         "node",
         (

@@ -27,17 +27,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from crypto_price_tracker_with_etl_dashboard_spark.operators._session_cache import (
-    ORIENT_CACHE,
-    session_plan_cache,
+    scratch,
+    session_cache,
 )
 
 # fixed-point scale for the clustering coefficient (parts-per-million)
 CC_SCALE = 1_000_000
-
-# ORIENT_CACHE holds TWO entries (deg + oriented) per (edge list,
-# cap) variant; 6 covers three interleaved variants without
-# unpersist/recache churn (the r12 ADVICE cap note).
-_ORIENT_MAX_ENTRIES = 6
 
 
 def capped_degree_table(e: DataFrame, max_degree: int | None) -> DataFrame:
@@ -45,7 +40,8 @@ def capped_degree_table(e: DataFrame, max_degree: int | None) -> DataFrame:
     degrees, filtered to nodes under the celebrity cap when set.  One
     explode + partial-agged count (not a union of two projections,
     whose branches would each re-read the upstream).  Shared between
-    triangle counting and the k-truss peel via ORIENT_CACHE (r13)."""
+    triangle counting and the k-truss peel via the session cache
+    (r13)."""
     deg = (
         e.select(F.explode(F.array("u", "v")).alias("node"))
         .groupBy("node")
@@ -64,7 +60,8 @@ def degree_oriented_edges(e: DataFrame, deg: DataFrame) -> DataFrame:
     order endpoints without a third lookup.  (deg, id) is a total
     order, so the oriented graph is a DAG and every triangle is
     enumerated exactly once as (a -> b -> c, a -> c).  Shared between
-    triangle counting and the k-truss peel via ORIENT_CACHE (r13)."""
+    triangle counting and the k-truss peel via the session cache
+    (r13)."""
     du = deg.select(F.col("node").alias("u"), F.col("deg").alias("udeg"))
     dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("vdeg"))
     lower_first = F.struct("udeg", "u") < F.struct("vdeg", "v")
@@ -77,27 +74,6 @@ def degree_oriented_edges(e: DataFrame, deg: DataFrame) -> DataFrame:
             F.when(lower_first, F.col("vdeg")).otherwise(F.col("udeg")).alias("ddeg"),
         )
     )
-
-# Session-scoped cache of the materialized intermediates (the oriented
-# edge list feeds THREE join branches and the degree table three more;
-# uncached, Spark re-runs the whole upstream edge build per branch —
-# measured 5.4s -> ~1.5s at sf0.1).  Evict-on-reentry keyed by
-# applicationId: unpersisting before the returned lazy DF executes
-# would force full recompute (see functions/dedup.py::_BANDED_CACHE).
-_CACHE: dict[str, list[DataFrame]] = {}
-
-
-def _hold(app_id: str, *dfs: DataFrame) -> None:
-    from crypto_price_tracker_with_etl_dashboard_spark.operators._broadcast_guard import (
-        evict_stale_app_entries,
-    )
-
-    evict_stale_app_entries(_CACHE, app_id)
-    prev = _CACHE.pop(app_id, None)
-    if prev is not None:
-        for d in prev:
-            d.unpersist()
-    _CACHE[app_id] = list(dfs)
 
 
 def triangle_counts(
@@ -166,19 +142,23 @@ def triangle_counts(
         # With max_degree >= 1 every hub has deg >= 2 neighbors, the
         # capped adjacency keeps >= 2 of them (cap >= 2), and w >= 1.
         raise ValueError("est_neighbor_cap requires max_degree >= 1")
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    own_e = []
-    if not (edges.storageLevel.useMemory or edges.storageLevel.useDisk):
-        # cache an UNCACHED input once (the ktruss/kcore convention,
-        # r12): a caller-cached edge build is reused as-is — no
-        # second cache layer, no extra materialize job
-        e = e.cache()
-        e.count()  # materialize BEFORE fan-out (first-action branches recompute)
-        own_e.append(e)
+    # An uncached input is cached once and materialized BEFORE the
+    # fan-out: the degree and orientation builds and the estimator
+    # all branch off it, and uncached, Spark re-runs the whole
+    # upstream edge build per branch (measured 5.4s -> ~1.5s at
+    # sf0.1).  A caller-cached edge build is reused as is.  Per-call
+    # entries are held until the next call: unpersisting before the
+    # returned lazy DF executes would force full recompute.
+    slot = scratch("triangles", edges.sparkSession)
+    e = slot.cache_input(
+        edges,
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")),
+        materialize=True,
+    )
 
     # explode, not union-of-projections: a union's branches each
     # re-read their upstream inside one action, doubling the pass.
-    # deg and oriented live in the SHARED orientation cache (r13):
+    # deg and oriented are SHARED through the session cache (r13):
     # the k-truss peel over the same (edge list, cap) builds the
     # identical pair, so whichever of events_triangles/events_ktruss
     # runs second skips both builds.  materialize-on-miss keeps the
@@ -190,19 +170,8 @@ def triangle_counts(
         .groupBy("node")
         .agg(F.count("*").alias("deg"))
     )
-    deg = session_plan_cache(
-        ORIENT_CACHE,
-        capped_degree_table(e, max_degree),
-        max_entries=_ORIENT_MAX_ENTRIES,
-        materialize=True,
-    )
-    oriented = session_plan_cache(
-        ORIENT_CACHE,
-        degree_oriented_edges(e, deg),
-        max_entries=_ORIENT_MAX_ENTRIES,
-        materialize=True,
-    )
-    held = own_e
+    deg = session_cache(capped_degree_table(e, max_degree), materialize=True)
+    oriented = session_cache(degree_oriented_edges(e, deg), materialize=True)
 
     e1 = oriented.select(
         F.col("src").alias("a"), F.col("dst").alias("b"), F.col("ddeg").alias("bdeg")
@@ -244,13 +213,11 @@ def triangle_counts(
         )
     )
     if est_neighbor_cap is None:
-        _hold(edges.sparkSession.sparkContext.applicationId, *held)
         return exact
 
     # ---- sampled-wedge estimator for the capped (hub) nodes -----------------
-    hubs = (
-        deg_full.filter(F.col("deg") > max_degree).cache()
-    )  # O(hubs) rows; from the cached edge list, one extra node-key agg
+    # O(hubs) rows; from the cached edge list, one extra node-key agg
+    hubs = slot.cache(deg_full.filter(F.col("deg") > max_degree))
     # full adjacency of hub sources only: both edge directions, then
     # the deterministic md5 neighbor rank (engine-portable: the DuckDB
     # twin computes the identical hex-substring integer)
@@ -264,18 +231,16 @@ def triangle_counts(
     ).cast("bigint")
     from pyspark.sql import Window
 
-    hub_adj = (
+    hub_adj = slot.cache(  # materialized: feeds both wedge arms
         directed.join(hubs.select(F.col("node").alias("u")), "u")
         .withColumn("h", edge_h)
         .withColumn(
             "rnk", F.row_number().over(Window.partitionBy("u").orderBy("h", "v"))
         )
         .filter(F.col("rnk") <= est_neighbor_cap)
-        .select("u", "v")
-        .cache()
+        .select("u", "v"),
+        materialize=True,
     )
-    hub_adj.count()  # feeds both wedge arms
-    held += [hubs, hub_adj]
     # sampled wedges (u; b, c), b < c by id — closure is checked
     # against the FULL undirected edge list (u < v once), so hub-hub
     # closures count too
@@ -317,7 +282,6 @@ def triangle_counts(
         .alias("cc_ppm"),
         F.col("w").alias("n_sampled_wedges"),
     )
-    _hold(edges.sparkSession.sparkContext.applicationId, *held)
     return exact.withColumn(
         "n_sampled_wedges", F.lit(0).cast("bigint")
     ).unionByName(est)

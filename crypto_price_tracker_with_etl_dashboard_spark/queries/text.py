@@ -10,6 +10,9 @@ from pyspark.sql import functions as F
 
 from crypto_price_tracker_with_etl_dashboard_spark.functions import dedup as D
 from crypto_price_tracker_with_etl_dashboard_spark.functions import text as T
+from crypto_price_tracker_with_etl_dashboard_spark.operators._session_cache import (
+    scratch,
+)
 from crypto_price_tracker_with_etl_dashboard_spark.queries import register
 from crypto_price_tracker_with_etl_dashboard_spark.sources import load_table
 
@@ -363,9 +366,8 @@ register("doc_simhash", q_doc_simhash, _simhash_sql())
 
 
 # ---- SimHash banded-Hamming near-dup join ----------------------------------
-# The signature table is cached once per session (both join sides
-# consume it inside one action — same discipline as
-# functions/dedup.py::minhash_lsh_pairs's banded cache).
+# The signature table is cached per call in one scratch slot (both
+# join sides consume it inside one action; the next call drops it).
 
 # 2 bands x 16 bits, hamming <= 1: the Manku banding bound
 # (max_hamming < n_bands) at the operating point a 32-BIT signature
@@ -374,21 +376,17 @@ register("doc_simhash", q_doc_simhash, _simhash_sql())
 # sketch-noise) pairs than <=1 while the wider 16-bit band keys make
 # candidate buckets far more selective.
 _SH_BANDS, _SH_BAND_BITS, _SH_MAX_HAMMING = 2, 16, 1
-_SH_CACHE: dict[str, DataFrame] = {}
 
 
 def q_doc_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from crypto_price_tracker_with_etl_dashboard_spark.sources.tables import fan_out
 
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    sigs = docs.select("doc_id", D.token_hashes("text").alias("hs")).select(
-        "doc_id", D.simhash32_from_hashes(F.col("hs")).alias("simhash")
-    ).cache()
-    app_id = spark.sparkContext.applicationId
-    prev = _SH_CACHE.get(app_id)
-    if prev is not None:
-        prev.unpersist()
-    _SH_CACHE[app_id] = sigs
+    sigs = scratch("doc_simhash_neardup", spark).cache(
+        docs.select("doc_id", D.token_hashes("text").alias("hs")).select(
+            "doc_id", D.simhash32_from_hashes(F.col("hs")).alias("simhash")
+        )
+    )
     pairs = D.simhash_hamming_pairs(
         sigs, id_col="doc_id", sim_col="simhash",
         n_bands=_SH_BANDS, band_bits=_SH_BAND_BITS,
@@ -3925,7 +3923,6 @@ register(
 # wedge SAMPLE, which is all an audit needs).
 
 _WEDGE_DEG_CAP = 16
-_WEDGE_CACHE: dict[str, DataFrame] = {}
 
 
 def q_doc_dup_transitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3955,14 +3952,9 @@ def q_doc_dup_transitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(Window.partitionBy("u").orderBy("h", "v")),
     )
     # three consumers in one action (both wedge arms + the cap
-    # count): cache with the module-standard per-app eviction so
-    # repeated calls don't stack pair-graph copies
-    ranked = ranked.cache()
-    app_id = spark.sparkContext.applicationId
-    prev = _WEDGE_CACHE.get(app_id)
-    if prev is not None:
-        prev.unpersist()
-    _WEDGE_CACHE[app_id] = ranked
+    # count); one scratch slot, so repeated calls don't stack
+    # pair-graph copies
+    ranked = scratch("doc_dup_transitivity", spark).cache(ranked)
     capped = ranked.filter(F.col("rnk") <= _WEDGE_DEG_CAP).select("u", "v")
     n_capped = ranked.filter(F.col("rnk") > _WEDGE_DEG_CAP).agg(
         F.count_distinct("u").cast("bigint").alias("n_capped_nodes")

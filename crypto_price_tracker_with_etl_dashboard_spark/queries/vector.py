@@ -13,6 +13,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from crypto_price_tracker_with_etl_dashboard_spark.functions import similarity as S
+from crypto_price_tracker_with_etl_dashboard_spark.operators._session_cache import (
+    keyed_cache,
+)
 from crypto_price_tracker_with_etl_dashboard_spark.queries import register
 from crypto_price_tracker_with_etl_dashboard_spark.sources import load_table
 
@@ -222,24 +225,13 @@ register(
 
 _NPROBE = 2
 
-# Session-scoped IVF index cache: the coarse quantizer is built once
-# per (session, table) and reused by every subsequent probe — the
-# build/query split a real IVF deployment has (see S.ivf_build).
-# Values are identical with or without the cache (centroids are
-# deterministic decimal-exact means), so oracle results are unchanged.
-_IVF_INDEX: dict[tuple[str, str], DataFrame] = {}
-
-
 def _ivf_index(spark: SparkSession, sf_dir: str, emb: DataFrame) -> DataFrame:
-    # applicationId, not id(session): id() values are reused after
-    # GC, and a false hit would hand back a DataFrame whose lineage
-    # references a stopped SparkContext.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cents = _IVF_INDEX.get(key)
-    if cents is None:
-        cents = S.ivf_build(emb)
-        _IVF_INDEX[key] = cents
-    return cents
+    """The IVF coarse quantizer, built once per sf_dir in the session
+    cache and reused by every subsequent probe — the build/query
+    split a real IVF deployment has (see S.ivf_build).  Values are
+    identical with or without the cache (centroids are deterministic
+    decimal-exact means), so oracle results are unchanged."""
+    return keyed_cache(spark, ("ivf_index", sf_dir), lambda: S.ivf_build(emb))
 
 
 def q_emb_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -486,23 +478,16 @@ _PQ_M = 4
 _PQ_K = 8
 _PQ_DSUB = _DIM // _PQ_M
 
-# Session-scoped codebook cache (build/query split, same rationale as
-# _IVF_INDEX: train once per (session, table), reuse across the
-# quantize audit and the ADC search — values are deterministic, so
-# cached vs fresh codebooks are identical).
-_PQ_BOOKS: dict[tuple[str, str], DataFrame] = {}
-
-
 def _pq_books(spark: SparkSession, sf_dir: str, emb: DataFrame) -> DataFrame:
-    # applicationId, not id(session): id() values are reused after
-    # GC, and a false hit would hand back a DataFrame whose lineage
-    # references a stopped SparkContext.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cents = _PQ_BOOKS.get(key)
-    if cents is None:
-        cents = S.pq_train(emb, m=_PQ_M, k=_PQ_K, dim=_DIM, iters=2)
-        _PQ_BOOKS[key] = cents
-    return cents
+    """The PQ codebooks, trained once per sf_dir in the session cache
+    and reused across the quantize audit and the ADC search (the
+    build/query split of :func:`_ivf_index`; values are
+    deterministic, so cached vs fresh codebooks are identical)."""
+    return keyed_cache(
+        spark,
+        ("pq_books", sf_dir),
+        lambda: S.pq_train(emb, m=_PQ_M, k=_PQ_K, dim=_DIM, iters=2),
+    )
 
 
 def q_emb_pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:

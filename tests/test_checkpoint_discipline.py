@@ -28,9 +28,10 @@ once per round, so the plan is a linear chain — and under AQE a lazy
 localCheckpoint is not free (its construction-time toRdd executes
 every upstream query stage as separate jobs).
 
-This test reads the operator SOURCE and asserts each file's
-eager/lazy census, so a future edit cannot silently flip a site from
-the safe choice without updating the documented reasoning here.
+This test reads the operator, function and query SOURCE and asserts
+each file's eager/lazy census, so a future edit cannot silently flip
+a site from the safe choice without updating the documented
+reasoning here.
 """
 
 from __future__ import annotations
@@ -67,6 +68,34 @@ EXPECTED = {
     # Lloyd loop + k-center/MMR states: eager (parallel consumers
     # per round — centroids feed assign + update branches)
     "functions/similarity.py": (7, 0),
+    # Query-level sites.  The lazy ones truncate a table that several
+    # branches of the caller's ONE action reference (no driver-side
+    # action reads it first): the first task to compute a partition
+    # persists it, and the block manager's per-block write lock makes
+    # a concurrent task for the same partition on that executor wait
+    # and read it, so the branches do not recompute the subtree —
+    # while eager would add one job per site.
+    # text: the quality-funnel stages (quality, kept_exact), both
+    # pair pipelines of the LSH precision/recall audit, the
+    # transitivity pair set and the IDF-weighted postings — all lazy
+    "queries/text.py": (0, 6),
+    # vector: the k-means seed-round centroids are eager (the batch
+    # fold collects them to the driver at construction — an action
+    # of its own — and the caller's action reads them again); the MMR
+    # pick set is lazy (serial rounds with no per-round action, each
+    # referencing it three times inside the next round's plan)
+    "queries/vector.py": (2, 1),
+    # behavior: the perceptron's user table and per-round weights are
+    # eager (every round is its own action re-reading users); the
+    # item-CF user-item table and the Markov stationary rounds are
+    # lazy (one action; serial rounds with no per-round action)
+    "queries/behavior.py": (2, 2),
+    # graph: LPA's community table for the modularity tag joins — lazy
+    # (three references inside one action)
+    "queries/graph.py": (0, 1),
+    # olap: the basket item table — lazy (three references inside one
+    # action)
+    "queries/olap.py": (0, 1),
 }
 
 def _flags(path: str) -> list[bool]:
@@ -115,7 +144,7 @@ def test_no_unpinned_files_use_localcheckpoint():
     """Any NEW file that starts calling localCheckpoint must be added
     to the census above (with its eager/lazy reasoning)."""
     seen = set()
-    for sub in ("operators", "functions"):
+    for sub in ("operators", "functions", "queries"):
         d = os.path.join(PKG, sub)
         for fn in os.listdir(d):
             if not fn.endswith(".py"):
