@@ -21,6 +21,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# The snapshot row, in the order every consumer (API reads, stream
+# pushes) receives its fields.
+SNAPSHOT_COLUMNS = ("symbol", "name", "current_price", "market_cap", "total_volume", "timestamp")
+
 
 def latest_snapshot(
     prices: DataFrame,
@@ -37,7 +41,7 @@ def latest_snapshot(
     out = (
         prices.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
-        .select("symbol", "name", "current_price", "market_cap", "total_volume", "timestamp")
+        .select(*SNAPSHOT_COLUMNS)
     )
     if order_by_cap:
         # PostgreSQL ORDER BY ... DESC places NULLs first (api/server.js:76);

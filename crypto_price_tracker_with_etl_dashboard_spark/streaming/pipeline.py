@@ -5,7 +5,7 @@ becomes ONE streaming query:
 
     raw micro-batch --foreachBatch--> validate/normalize
                                    -> append to prices table
-                                   -> recompute latest snapshot
+                                   -> fold into latest snapshot
                                    -> push_fn(snapshot rows)
 
 Delivery semantics: the reference is at-most-once (a failed fetch or
@@ -29,15 +29,20 @@ pipeline runs off any streaming source (kafka/rate/custom) — only
 from __future__ import annotations
 
 import datetime as dt
+import math
 from typing import Callable, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from crypto_price_tracker_with_etl_dashboard_spark.schema import COINGECKO_RAW_SCHEMA
 from crypto_price_tracker_with_etl_dashboard_spark.sources.ingest import validate_and_normalize
-from crypto_price_tracker_with_etl_dashboard_spark.operators.latest import latest_snapshot
+from crypto_price_tracker_with_etl_dashboard_spark.operators.latest import (
+    SNAPSHOT_COLUMNS,
+    latest_snapshot,
+)
 
 
 _CANCEL_CLASSES = (
@@ -131,15 +136,22 @@ class _IncrementalSnapshot:
     micro-batch (the naive T3 re-query) is an unbounded full-history
     scan per trigger at scale.  Instead: seed ONCE per (re)start from
     the table — restart-safe, a recovered stream rebuilds exact state
-    — then fold each batch's own latest rows into the dict.  Per
-    trigger this costs O(|batch| + |symbols|), independent of table
-    size.
+    — then fold each batch's own rows into the dict.  Per trigger
+    this costs one narrow Spark job (a projection + collect of the
+    batch: no window, sort or shuffle) plus O(|batch| + |symbols|)
+    driver work, independent of table size.
 
-    Correctness: within a batch, ties on the batch-constant timestamp
-    are resolved by ``snapshot_for_push`` over the batch itself (same
-    event_id tiebreak as a full recompute); across batches timestamps
-    strictly increase, so newest-timestamp-wins merging reproduces
-    the full-table latest_snapshot exactly."""
+    Correctness: the fold keeps, per symbol, the row with the
+    greatest ``(timestamp, event_id)`` — the same total order
+    ``latest_snapshot`` ranks by (greatest ``timestamp`` alone when
+    the batch has no ``event_id``).  A state row ranks below any
+    batch row at its own timestamp (event ids are >= 0), so a batch
+    replaces what it ties with; across batches timestamps strictly
+    increase, so the result reproduces the full-table
+    ``snapshot_for_push`` exactly.  Collecting the batch on the
+    driver is bounded by one poll: a warm batch is one raw poll file
+    (``maxFilesPerTrigger=1``) or one feed tick, the same order of
+    size as the snapshot the driver already holds."""
 
     def __init__(self) -> None:
         self.rows: Optional[list] = None
@@ -152,11 +164,19 @@ class _IncrementalSnapshot:
     @staticmethod
     def _cap_order(rows: list) -> list:
         # PG ORDER BY market_cap DESC NULLS FIRST parity (O1,
-        # api/server.js:76) — same order latest_snapshot emits.
-        return sorted(
-            rows,
-            key=lambda r: (r["market_cap"] is not None, -(r["market_cap"] or 0.0)),
-        )
+        # api/server.js:76) — same order latest_snapshot emits: NULL,
+        # then NaN (Spark ranks NaN above every double), then caps
+        # descending.  A NaN inside a plain float key would leave
+        # Python's sort order undefined.
+        def key(r):
+            cap = r["market_cap"]
+            if cap is None:
+                return (0, 0.0)
+            if math.isnan(cap):
+                return (1, 0.0)
+            return (2, -cap)
+
+        return sorted(rows, key=key)
 
     def merge(self, spark: SparkSession, table_path: str, batch_clean: DataFrame) -> list:
         """Fold one written batch into the snapshot; returns the rows
@@ -164,15 +184,27 @@ class _IncrementalSnapshot:
         if self.rows is None:
             # cold start / restart: one full read seeds state (the
             # just-written batch is already in the table)
+            try:
+                table = spark.read.parquet(table_path)
+            except AnalysisException as exc:
+                # Only "no data files yet" (an all-invalid first poll
+                # wrote nothing) is an empty snapshot; a table with
+                # data that fails to read still fails the batch (T7).
+                if exc.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+                    raise
+                return []
             self.full_reads += 1
-            self.rows = snapshot_for_push(spark.read.parquet(table_path)).collect()
+            self.rows = snapshot_for_push(table).collect()
             return self.rows
-        by_symbol = {r["symbol"]: r for r in self.rows}
-        for r in snapshot_for_push(batch_clean).collect():
-            prev = by_symbol.get(r["symbol"])
-            if prev is None or r["timestamp"] >= prev["timestamp"]:
-                by_symbol[r["symbol"]] = r
-        self.rows = self._cap_order(list(by_symbol.values()))
+        has_event_id = "event_id" in batch_clean.columns
+        columns = SNAPSHOT_COLUMNS + (("event_id",) if has_event_id else ())
+        best = {r["symbol"]: ((r["timestamp"], -1), r) for r in self.rows}
+        for r in batch_clean.select(*columns).collect():
+            rank = (r["timestamp"], r["event_id"] if has_event_id else 0)
+            prev = best.get(r["symbol"])
+            if prev is None or rank > prev[0]:
+                best[r["symbol"]] = (rank, Row(**{c: r[c] for c in SNAPSHOT_COLUMNS}))
+        self.rows = self._cap_order([r for _, r in best.values()])
         return self.rows
 
 
@@ -301,6 +333,52 @@ def streaming_snapshot_query(
     )
 
 
+def _write_feed_ticks(
+    spark: SparkSession,
+    batch_df: DataFrame,
+    table_path: str,
+    snapshot: Optional[_IncrementalSnapshot],
+) -> Optional[list]:
+    """One ``market_feed`` micro-batch: append each of its ticks as
+    its own (dt, batch) partition and fold it into ``snapshot``.
+    Returns the snapshot after the last tick, or None without a
+    ``snapshot`` (nothing to push)."""
+    epoch = dt.datetime(2024, 1, 1)
+    ticks = [r["tick"] for r in batch_df.select("tick").distinct().collect()]
+    rows = None
+    for tick in sorted(ticks):
+        batch_ts = epoch + dt.timedelta(seconds=300 * tick)
+        clean = validate_and_normalize(
+            batch_df.filter(F.col("tick") == tick).select(
+                "symbol", "name", "current_price", "market_cap", "total_volume"
+            ),
+            batch_ts,
+        )
+        # Idempotent per-tick sink (see run_ingest_stream):
+        # replaying a tick overwrites its own partition, so
+        # at-least-once replay yields exactly-once contents.
+        # Unified table layout: ALL write paths (this feed
+        # loop, run_ingest_stream, and the facade's batch
+        # append) partition by (dt, batch) — the tick number
+        # IS this path's batch id.  Divergent partition
+        # schemes under one table root make Spark's partition
+        # discovery fail outright.
+        out = (
+            clean.withColumn("dt", F.to_date("timestamp"))
+            .withColumn("batch", F.lit(int(tick)))
+            .withColumn("event_id", F.monotonically_increasing_id())
+        )
+        (
+            out.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("dt", "batch")
+            .parquet(table_path)
+        )
+        if snapshot is not None:
+            rows = snapshot.merge(spark, table_path, out)
+    return rows
+
+
 def run_feed_stream(
     spark: SparkSession,
     table_path: str,
@@ -329,44 +407,12 @@ def run_feed_stream(
         reader = reader.option(k, v)
     feed = reader.load()
 
-    epoch = dt.datetime(2024, 1, 1)
-    snapshot = _IncrementalSnapshot()
+    snapshot = _IncrementalSnapshot() if push_fn is not None else None
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         try:
-            ticks = [r["tick"] for r in batch_df.select("tick").distinct().collect()]
-            rows = None
-            for tick in sorted(ticks):
-                batch_ts = epoch + dt.timedelta(seconds=300 * tick)
-                clean = validate_and_normalize(
-                    batch_df.filter(F.col("tick") == tick).select(
-                        "symbol", "name", "current_price", "market_cap", "total_volume"
-                    ),
-                    batch_ts,
-                )
-                # Idempotent per-tick sink (see run_ingest_stream):
-                # replaying a tick overwrites its own partition, so
-                # at-least-once replay yields exactly-once contents.
-                # Unified table layout: ALL write paths (this feed
-                # loop, run_ingest_stream, and the facade's batch
-                # append) partition by (dt, batch) — the tick number
-                # IS this path's batch id.  Divergent partition
-                # schemes under one table root make Spark's partition
-                # discovery fail outright.
-                out = (
-                    clean.withColumn("dt", F.to_date("timestamp"))
-                    .withColumn("batch", F.lit(int(tick)))
-                    .withColumn("event_id", F.monotonically_increasing_id())
-                )
-                (
-                    out.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("dt", "batch")
-                    .parquet(table_path)
-                )
-                if push_fn is not None:
-                    rows = snapshot.merge(spark, table_path, out)
-            if push_fn is not None and rows is not None:
+            rows = _write_feed_ticks(spark, batch_df, table_path, snapshot)
+            if rows is not None:
                 push_fn(rows)
         except Exception as exc:
             if _is_cancellation(exc, spark):

@@ -1555,3 +1555,199 @@ def test_streaming_abandonment_timeout_flush_bounded_latency(spark, tmp_path):
         assert rows[0]["user_id"] == 1
     finally:
         q.stop()
+
+
+def _clean_poll(spark, raw_path, batch_id):
+    """A raw poll file through the stream's own batch transform
+    (validate, stamp, partition columns, event_id)."""
+    import datetime as dt
+
+    from crypto_price_tracker_with_etl_dashboard_spark.sources.ingest import (
+        validate_and_normalize,
+    )
+
+    raw = spark.read.schema(COINGECKO_RAW_SCHEMA).parquet(raw_path)
+    clean = validate_and_normalize(
+        raw, dt.datetime(2024, 1, 1) + dt.timedelta(minutes=5 * batch_id)
+    )
+    return (
+        clean.withColumn("dt", F.to_date("timestamp"))
+        .withColumn("batch", F.lit(batch_id))
+        .withColumn("event_id", F.monotonically_increasing_id())
+    )
+
+
+def _write_batch(out, table):
+    out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        "dt", "batch"
+    ).parquet(table)
+
+
+def test_warm_merge_runs_one_spark_job(spark, tmp_path):
+    """The warm push folds the batch on the driver: one narrow
+    collect, no window / sort shuffle jobs over the batch."""
+    from crypto_price_tracker_with_etl_dashboard_spark.streaming.pipeline import (
+        _IncrementalSnapshot,
+    )
+
+    table = str(tmp_path / "prices")
+    _write_raw_batch(spark, str(tmp_path / "raw0"), BATCH1)
+    _write_raw_batch(spark, str(tmp_path / "raw1"), BATCH2)
+    first = _clean_poll(spark, str(tmp_path / "raw0"), 0)
+    _write_batch(first, table)
+    snap = _IncrementalSnapshot()
+    snap.merge(spark, table, first)
+
+    second = _clean_poll(spark, str(tmp_path / "raw1"), 1)
+    _write_batch(second, table)
+    sc = spark.sparkContext
+    group = "warm-merge-one-job"
+    sc.setJobGroup(group, "warm merge")
+    try:
+        rows = snap.merge(spark, table, second)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert [r["symbol"] for r in rows] == ["btc", "eth", "sol"]
+
+
+def test_repeated_symbol_in_poll_pushes_greater_event_id(spark, tmp_path):
+    """A poll repeating a symbol ties on the batch timestamp; the warm
+    fold keeps the greater event_id, as the full-table snapshot does."""
+    from crypto_price_tracker_with_etl_dashboard_spark.streaming.pipeline import (
+        snapshot_for_push,
+    )
+
+    raw_dir = str(tmp_path / "raw")
+    table = str(tmp_path / "prices")
+    pushes: list[list] = []
+    _write_raw_batch(spark, raw_dir, BATCH1)
+    _write_raw_batch(
+        spark,
+        raw_dir,
+        [
+            ("BTC", "Bitcoin", 110.0, 1.1e9, 1e6),
+            ("SOL", "Solana", 20.0, 2e8, 5e4),
+            ("BTC", "Bitcoin", 111.0, 1.2e9, 2e6),
+        ],
+    )
+    q = run_ingest_stream(spark, raw_dir, table, str(tmp_path / "ckpt"), push_fn=pushes.append)
+    q.awaitTermination(180)
+
+    assert len(pushes) == 2
+    got = {r["symbol"]: r for r in pushes[-1]}
+    assert got["btc"]["current_price"] == 111.0
+    expect = snapshot_for_push(spark.read.parquet(table)).collect()
+    assert [tuple(r) for r in pushes[-1]] == [tuple(r) for r in expect]
+    assert all(r.__fields__ == list(expect[0].__fields__) for r in pushes[-1])
+
+
+def test_feed_batch_with_several_ticks_pushes_table_snapshot(spark, tmp_path):
+    """A market_feed micro-batch may carry several ticks; after its
+    last tick the push equals the full-table snapshot."""
+    import datetime as dt
+
+    from crypto_price_tracker_with_etl_dashboard_spark.sources.market_feed import (
+        MarketFeedDataSource,
+        synthetic_page,
+    )
+    from crypto_price_tracker_with_etl_dashboard_spark.streaming.pipeline import (
+        _IncrementalSnapshot,
+        _write_feed_ticks,
+        snapshot_for_push,
+    )
+
+    schema = MarketFeedDataSource({}).schema()
+    table = str(tmp_path / "prices")
+    snap = _IncrementalSnapshot()
+    for ticks in ([0, 1], [2, 3, 4]):
+        batch = spark.createDataFrame(
+            [r for t in ticks for r in synthetic_page(1, 30, t, 42)], schema
+        )
+        rows = _write_feed_ticks(spark, batch, table, snap)
+    expect = snapshot_for_push(spark.read.parquet(table)).collect()
+    assert snap.full_reads == 1
+    assert {r["timestamp"] for r in rows} == {dt.datetime(2024, 1, 1, 0, 20)}  # tick 4
+    assert [tuple(r) for r in rows] == [tuple(r) for r in expect]
+
+
+def test_warm_merge_orders_nan_and_null_caps_like_spark(spark, tmp_path):
+    """NULL caps first, then NaN (Spark ranks NaN above every double),
+    then caps descending — the order snapshot_for_push emits."""
+    import datetime as dt
+
+    from crypto_price_tracker_with_etl_dashboard_spark.schema import PRICES_SCHEMA
+    from crypto_price_tracker_with_etl_dashboard_spark.streaming.pipeline import (
+        _IncrementalSnapshot,
+        snapshot_for_push,
+    )
+
+    t0 = dt.datetime(2024, 1, 1)
+    t1 = t0 + dt.timedelta(minutes=5)
+    seed = [
+        ("btc", "Bitcoin", 100.0, 1e9, 1e6, t0),
+        ("a", "A", 1.0, 1.0, 1.0, t0),
+    ]
+    batch = [
+        ("z", "Z", 1.0, None, 1.0, t1),
+        ("c", "C", 1.0, 5e9, 1.0, t1),
+        ("n", "N", 1.0, float("nan"), 1.0, t1),
+        ("a", "A", 2.0, 2.0, 1.0, t1),
+    ]
+    table = str(tmp_path / "prices")
+    spark.createDataFrame(seed, PRICES_SCHEMA).write.parquet(table)
+    snap = _IncrementalSnapshot()
+    snap.merge(spark, table, spark.read.parquet(table))
+    rows = snap.merge(spark, table, spark.createDataFrame(batch, PRICES_SCHEMA))
+
+    expect = snapshot_for_push(spark.createDataFrame(seed + batch, PRICES_SCHEMA)).collect()
+    assert [r["symbol"] for r in expect] == ["z", "n", "c", "btc", "a"]
+    assert [r["symbol"] for r in rows] == [r["symbol"] for r in expect]
+
+
+def test_all_invalid_first_poll_pushes_empty_snapshot(spark, tmp_path):
+    """Batch 0 writes nothing (every row fails validation): it pushes
+    the empty snapshot instead of failing, and the next poll seeds
+    from the table with one full read."""
+    from crypto_price_tracker_with_etl_dashboard_spark.streaming.pipeline import (
+        _IncrementalSnapshot,
+        snapshot_for_push,
+    )
+
+    raw_dir = str(tmp_path / "raw")
+    table = str(tmp_path / "prices")
+    pushes: list[list] = []
+    state = _IncrementalSnapshot()
+    _write_raw_batch(spark, raw_dir, [(None, "Bad", 1.0, None, None), ("X", None, 1.0, 1.0, 1.0)])
+    _write_raw_batch(spark, raw_dir, BATCH2)
+    q = run_ingest_stream(
+        spark, raw_dir, table, str(tmp_path / "ckpt"), push_fn=pushes.append,
+        snapshot_state=state,
+    )
+    q.awaitTermination(180)
+
+    assert len(pushes) == 2
+    assert pushes[0] == []
+    expect = snapshot_for_push(spark.read.parquet(table)).collect()
+    assert [tuple(r) for r in pushes[1]] == [tuple(r) for r in expect]
+    assert [r["symbol"] for r in pushes[1]] == ["btc", "sol"]
+    assert state.full_reads <= 1
+
+
+def test_cold_seed_fails_on_unreadable_table(spark, tmp_path):
+    """Only a table with no data files yet reads as empty: a table
+    whose data cannot be read still fails the batch (T7)."""
+    from crypto_price_tracker_with_etl_dashboard_spark.schema import PRICES_SCHEMA
+    from crypto_price_tracker_with_etl_dashboard_spark.streaming.pipeline import (
+        _IncrementalSnapshot,
+    )
+
+    part = tmp_path / "prices" / "dt=2024-01-01" / "batch=0"
+    part.mkdir(parents=True)
+    (part / "part-00000.parquet").write_bytes(b"not parquet")
+    snap = _IncrementalSnapshot()
+    with pytest.raises(Exception) as err:
+        snap.merge(spark, str(tmp_path / "prices"), spark.createDataFrame([], PRICES_SCHEMA))
+    assert "UNABLE_TO_INFER_SCHEMA" not in str(err.value)
+    assert snap.rows is None
